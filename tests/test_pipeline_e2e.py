@@ -6,9 +6,10 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
-from us_weather_energy_analysis_pipeline_spark.main import run_pipeline
+from us_weather_energy_analysis_pipeline_spark.main import build_parser, run_pipeline
 
 
 def test_pipeline_end_to_end(spark, tmp_path):
@@ -57,3 +58,12 @@ def test_realtime_mode_single_day(spark, tmp_path):
     )
     assert report["total_rows"] == 1
     assert report["latest_date"] == dt.date(2024, 6, 30)
+
+
+def test_cli_accepts_offline_and_rejects_online():
+    """Offline synthesis is the CLI's only mode: the documented usage line
+    (``historical --out X --offline``) parses, and ``--online`` does not."""
+    args = build_parser().parse_args(["historical", "--out", "X", "--offline"])
+    assert (args.mode, args.out) == ("historical", "X")
+    with pytest.raises(SystemExit):
+        build_parser().parse_args(["historical", "--out", "X", "--online"])

@@ -3,18 +3,35 @@ injectable HTTP fetchers (no network), CSV/parquet sinks."""
 
 from __future__ import annotations
 
+import datetime as dt
 import json
 
 import pytest
+from pyspark.sql import functions as F
 
-from us_weather_energy_analysis_pipeline_spark.sources.eia import read_eia_landing
+from us_weather_energy_analysis_pipeline_spark.main import (
+    synth_eia_payload,
+    synth_noaa_payload,
+)
+from us_weather_energy_analysis_pipeline_spark.plans.etl import (
+    build_fact,
+    process_energy,
+    process_weather,
+)
+from us_weather_energy_analysis_pipeline_spark.sources.eia import (
+    eia_records_df,
+    read_eia_landing,
+)
 from us_weather_energy_analysis_pipeline_spark.sources.fetch import (
     fetch_eia_pages,
     fetch_noaa,
     fetch_with_retries,
     land_json,
 )
-from us_weather_energy_analysis_pipeline_spark.sources.noaa import read_noaa_landing
+from us_weather_energy_analysis_pipeline_spark.sources.noaa import (
+    noaa_records_df,
+    read_noaa_landing,
+)
 
 NOAA_PAYLOAD = {
     "results": [
@@ -251,3 +268,85 @@ class TestRecordedCassette:
         landed = read_noaa_landing(spark, str(tmp_path / "noaa.json"))
         got = {(r["datatype"], r["value_c"]) for r in landed.collect()}
         assert got == {("TMAX", 36.1), ("TMIN", 25.6)}
+
+
+def test_land_json_bytes_equal_dumps_and_read_back(spark, tmp_path):
+    """The bronze file is exactly ``json.dumps(payload)``, and both
+    landing readers parse it back."""
+    noaa, eia = str(tmp_path / "noaa.json"), str(tmp_path / "eia.json")
+    land_json(NOAA_PAYLOAD, noaa)
+    land_json(EIA_PAYLOAD, eia)
+    with open(noaa, "rb") as f:
+        assert f.read() == json.dumps(NOAA_PAYLOAD).encode()
+    with open(eia, "rb") as f:
+        assert f.read() == json.dumps(EIA_PAYLOAD).encode()
+    got = {(r["datatype"], r["value_c"]) for r in read_noaa_landing(spark, noaa).collect()}
+    assert got == {("TMAX", 36.1), ("TMIN", 25.6)}
+    got = {(r["period_str"], r["value_str"]) for r in read_eia_landing(spark, eia).collect()}
+    assert got == {("2025-07-29T00", "512.3"), ("2025-07-29T01", "490.1")}
+
+
+class TestRecordsDf:
+    """The in-memory source builders (``noaa_records_df`` /
+    ``eia_records_df``): value rules, empty payloads and plan shape."""
+
+    NOAA_SCHEMA = "struct<date_str:string,datatype:string,value_c:double,city:string>"
+    EIA_SCHEMA = "struct<period_str:string,value_str:string,city:string>"
+
+    def test_noaa_none_value_is_null_not_nan(self, spark):
+        payload = {"results": [
+            {"date": "2024-01-01T00:00:00", "datatype": "TMAX", "value": None},
+            {"date": "2024-01-01T00:00:00", "datatype": "TMIN", "value": 3},
+        ]}
+        df = noaa_records_df(spark, {"X": payload})
+        rows = df.select(
+            "datatype", "value_c",
+            F.col("value_c").isNull().alias("is_null"),
+            F.isnan("value_c").alias("is_nan"),
+        ).orderBy("datatype").collect()
+        assert [tuple(r) for r in rows] == [
+            ("TMAX", None, True, False),
+            ("TMIN", 3.0, False, False),
+        ]
+        assert all(r["city"] == "X" for r in df.collect())
+
+    def test_eia_none_is_null_and_garbage_stays_string(self, spark):
+        data = [
+            {"period": "2024-01-01T00", "value": None},
+            {"period": "2024-01-01T01", "value": "abc"},
+            {"period": "2024-01-01T02", "value": 512},
+        ]
+        df = eia_records_df(spark, {"X": {"response": {"data": data}}})
+        got = {r["period_str"]: r["value_str"] for r in df.collect()}
+        assert got == {"2024-01-01T00": None, "2024-01-01T01": "abc", "2024-01-01T02": "512"}
+        # the garbage reading try_casts to NULL in the transform, so the
+        # day sums to what the one numeric reading alone gives
+        only_valid = eia_records_df(spark, {"X": {"response": {"data": data[2:]}}})
+        assert (
+            process_energy(df).collect() == process_energy(only_valid).collect()
+        )
+
+    @pytest.mark.parametrize("payloads", [{}, {"X": {}}, {"X": {"unexpected": 1}}])
+    def test_empty_payloads_give_declared_schema(self, spark, payloads):
+        noaa = noaa_records_df(spark, payloads)
+        eia = eia_records_df(spark, payloads)
+        assert noaa.count() == 0 and noaa.schema.simpleString() == self.NOAA_SCHEMA
+        assert eia.count() == 0 and eia.schema.simpleString() == self.EIA_SCHEMA
+
+    def test_sources_are_jvm_checkpoints(self, spark):
+        """The sources are checkpointed in the JVM: the fact's optimized
+        plan holds no literal rows (no LocalRelation for the optimizer to
+        fold), and each source's lineage has no PythonRDD (no Python
+        worker re-reading pickled rows on each scan)."""
+        start, end = dt.date(2024, 1, 1), dt.date(2024, 1, 10)
+        noaa = noaa_records_df(spark, {"X": synth_noaa_payload("X", start, end)})
+        eia = eia_records_df(spark, {"X": synth_eia_payload("X", start, end)})
+        fact = build_fact(
+            process_weather(noaa, start, end), process_energy(eia, start, end)
+        )
+        assert "LocalRelation" not in fact._jdf.queryExecution().optimizedPlan().toString()
+        for src in (noaa, eia):
+            lineage = src._jdf.queryExecution().toRdd().toDebugString()
+            assert "LocalCheckpointRDD" in lineage
+            assert "PythonRDD" not in lineage
+        assert fact.count() == 10

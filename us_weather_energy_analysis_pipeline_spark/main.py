@@ -1,12 +1,14 @@
 """CLI entry — parity with the reference's ``python main.py
 {historical|realtime}`` (reference `main.py:40-55`).
 
-Offline-first: with ``--offline`` (default — this container has no
-network) the raw NOAA/EIA payloads are synthesized deterministically in
-the FIXTURES F1/F2 shapes, landed as bronze JSON, and the exact same
-read→transform→join→QC→write plan runs over them. With ``--online`` the
-landing step fetches from the real APIs instead; everything downstream is
-identical — the fetch layer is the only thing that changes.
+Offline synthesis is the only mode. The raw NOAA/EIA payloads are
+synthesized deterministically in the FIXTURES F1/F2 shapes, and each is
+landed as bronze JSON under ``<out>/raw`` as an audit copy of what the run
+read. The plan itself (transform→join→QC→write) is built from the
+in-memory payloads, not from those files. The online fetchers in
+``sources/fetch.py`` (paging, retries, backoff) are not wired to this CLI;
+they are tested only through injected fake HTTP clients. ``--offline`` is
+accepted and changes nothing; there is no ``--online``.
 
 Usage:
     python -m us_weather_energy_analysis_pipeline_spark.main historical \
@@ -106,17 +108,23 @@ def run_pipeline(
     return report
 
 
-def main() -> None:
-    parser = argparse.ArgumentParser(description="weather+energy ETL (Spark)")
+def build_parser() -> argparse.ArgumentParser:
+    parser = argparse.ArgumentParser(
+        description="weather+energy ETL (Spark) over synthesized NOAA/EIA payloads; "
+        "the raw payloads land under <out>/raw as an audit copy"
+    )
     parser.add_argument("mode", choices=["historical", "realtime"])
     parser.add_argument("--out", default="data")
     parser.add_argument(
         "--offline",
         action="store_true",
-        default=True,
-        help="synthesize raw payloads instead of fetching (default: on)",
+        help="accepted for compatibility: offline synthesis is the only mode",
     )
-    args = parser.parse_args()
+    return parser
+
+
+def main() -> None:
+    args = build_parser().parse_args()
     logging.basicConfig(
         level=logging.INFO, format="%(asctime)s %(name)s %(levelname)s %(message)s"
     )

@@ -113,3 +113,43 @@ def local_df(spark: SparkSession, rows, schema):
         return spark.createDataFrame(tbl, schema=st)
     except Exception:  # pragma: no cover - version-drift safety net
         return spark.createDataFrame(list(rows), schema=st)
+
+
+def checkpointed_columns_df(spark: SparkSession, columns: dict[str, list], schema: str):
+    """Source DataFrame built once in the JVM from driver-side columns.
+
+    ``columns`` maps each field of the DDL ``schema`` to a list of plain
+    values (``None`` → NULL), all lists of one length. They become one
+    ``pyarrow.Table``, enter the JVM once, and are eagerly
+    ``localCheckpoint()``ed, so every later scan reads block-manager
+    memory through a ``LogicalRDD``: no Python worker, no pickling, and no
+    literal rows for the optimizer to fold. The eager checkpoint costs one
+    job per call; the blocks are freed by the context cleaner once the
+    frame is unreachable.
+
+    This is for the large fact sources (the ETL's readings, which its
+    plans scan many times per run); small literal dims stay on
+    ``local_df``, whose LocalRelation broadcasts and collects job-free.
+    Designs measured on the ``etl_historical`` benchmark workload
+    (``perfbench/run.py --seconds 3``, 4-vCPU VM) against the former
+    pickled-RDD sources, and rejected:
+
+    - the bare Arrow frame (this without the checkpoint) is a
+      LocalRelation, and ``ConvertToLocalRelation`` folds the parse
+      projections over it row by row on the driver in every optimization:
+      Catalyst optimization took 25 s per op instead of 0.2 s, and the
+      cold op 121 CPU-s against 105 on the same seed;
+    - ``persist()`` on the source frames (pickled RDD kept): 106 and 100
+      CPU-s per op against 105 and 108 on the same seeds, no gain;
+    - ``persist()`` on the joined fact: its 32 cached partitions feed the
+      partitioned parquet sink, which then wrote 3,224 files instead of
+      101, and the dashboard's reads of that table went from 17 files to
+      544.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    st = StructType.fromDDL(schema)
+    tbl = pa.Table.from_pydict(columns, schema=to_arrow_schema(st))
+    return spark.createDataFrame(tbl, schema=st).localCheckpoint(eager=True)

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from us_weather_energy_analysis_pipeline_spark.schemas import EIA_RAW_SCHEMA
+from us_weather_energy_analysis_pipeline_spark.session import checkpointed_columns_df
 
 
 def read_eia_landing(spark: SparkSession, path: str, city: str | None = None) -> DataFrame:
@@ -36,10 +37,17 @@ def flatten_eia(raw: DataFrame, city: str | None = None) -> DataFrame:
 
 def eia_records_df(spark: SparkSession, payloads: dict[str, dict]) -> DataFrame:
     """Build the hourly DataFrame from in-memory {city: payload} dicts
-    (FIXTURES F2 shape) — the test/fixture path."""
-    rows = []
+    (FIXTURES F2 shape; what ``main.run_pipeline`` reads), same shape as
+    read_eia_landing. Built column-wise and checkpointed in the JVM
+    (``session.checkpointed_columns_df``)."""
+    cols = {"period_str": [], "value_str": [], "city": []}
     for city, payload in payloads.items():
-        for rec in (payload.get("response") or {}).get("data", []) or []:
-            v = rec.get("value")
-            rows.append((rec.get("period"), None if v is None else str(v), city))
-    return spark.createDataFrame(rows, "period_str string, value_str string, city string")
+        recs = (payload.get("response") or {}).get("data", []) or []
+        cols["period_str"].extend(rec.get("period") for rec in recs)
+        cols["value_str"].extend(
+            None if rec.get("value") is None else str(rec["value"]) for rec in recs
+        )
+        cols["city"].extend([city] * len(recs))
+    return checkpointed_columns_df(
+        spark, cols, "period_str string, value_str string, city string"
+    )

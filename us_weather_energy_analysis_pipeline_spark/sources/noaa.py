@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from us_weather_energy_analysis_pipeline_spark.schemas import NOAA_RAW_SCHEMA
+from us_weather_energy_analysis_pipeline_spark.session import checkpointed_columns_df
 
 
 def read_noaa_landing(spark: SparkSession, path: str, city: str | None = None) -> DataFrame:
@@ -39,19 +40,19 @@ def flatten_noaa(raw: DataFrame, city: str | None = None) -> DataFrame:
 
 
 def noaa_records_df(spark: SparkSession, payloads: dict[str, dict]) -> DataFrame:
-    """Build the long-form DataFrame from in-memory {city: payload} dicts —
-    the test/fixture path (FIXTURES F1), same shape as read_noaa_landing."""
-    rows = []
+    """Build the long-form DataFrame from in-memory {city: payload} dicts
+    (FIXTURES F1 shape; what ``main.run_pipeline`` reads), same shape as
+    read_noaa_landing. Built column-wise and checkpointed in the JVM
+    (``session.checkpointed_columns_df``)."""
+    cols = {"date_str": [], "datatype": [], "value_c": [], "city": []}
     for city, payload in payloads.items():
-        for rec in payload.get("results", []) or []:
-            rows.append(
-                (
-                    rec.get("date"),
-                    rec.get("datatype"),
-                    float(rec["value"]) if rec.get("value") is not None else None,
-                    city,
-                )
-            )
-    return spark.createDataFrame(
-        rows, "date_str string, datatype string, value_c double, city string"
+        recs = payload.get("results", []) or []
+        cols["date_str"].extend(rec.get("date") for rec in recs)
+        cols["datatype"].extend(rec.get("datatype") for rec in recs)
+        cols["value_c"].extend(
+            float(rec["value"]) if rec.get("value") is not None else None for rec in recs
+        )
+        cols["city"].extend([city] * len(recs))
+    return checkpointed_columns_df(
+        spark, cols, "date_str string, datatype string, value_c double, city string"
     )
